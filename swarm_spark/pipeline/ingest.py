@@ -6,11 +6,14 @@ Dataflow, expressed Spark-first::
        (driver)        (driver)        (ONE read per rule config,
                                         all matched files at once)
         ──R2──▶ routed Log frame ──R3──▶ validated
-        ──T1──▶ data struct stripped (per destination batch)
         ──T2/T3/T4──▶ envelope (id, ingest_id, timestamp, ingested_at, data)
-        ──G1──▶ loop over distinct (dataset, table, partition)
-        ──Q1/Q2/Q4──▶ sink.ensure_table (strict merge / evolve)
-        ──W1──▶ sink.append (aligned to evolved schema)
+        ──G1──▶ ONE grouped profile over (dataset, table, partition):
+                destinations, row counts and the T1 keep-set of ``data``
+        ──T1──▶ data struct stripped per destination (type derived in
+                Python from the keep-set, no extra job)
+        ──Q1/Q2/Q4──▶ sink.ensure_table, serially (strict merge / evolve)
+        ──W1──▶ sink.append per destination, concurrently from a
+                thread pool (aligned to evolved schema)
         ──W6──▶ load-log metadata row
 
 Scale notes (100 TB):
@@ -19,9 +22,16 @@ Scale notes (100 TB):
 - One ``spark.read.json`` per distinct Source config, not per object:
   a million matched files become one distributed scan with full-scan
   inference, not a million jobs.
-- The transformed frame is persisted before the per-destination loop so
-  N destinations cost one source scan + N cheap filtered writes; the
-  routing columns are low-cardinality by construction (table names).
+- The transformed frame is persisted, then ONE grouped aggregation
+  yields every destination's row count and keep-set, so N destinations
+  cost one source scan + one profile aggregation + N filtered writes
+  (each write counts its own rows) — not a strip aggregation and a
+  count per destination. The routing columns are low-cardinality by
+  construction (table names), so the profile's result is small.
+- The N writes run concurrently, bounded by min(distinct tables,
+  defaultParallelism): small destinations no longer serialize behind
+  each other's job latency, and every write job stays in the caller's
+  job group.
 - Per-record work (explode fan-out, struct rebuild, md5 id) is all
   Catalyst expressions — whole-stage codegen, no Python in the row
   path (the canonical-id pandas UDF is opt-in).
@@ -31,21 +41,32 @@ from __future__ import annotations
 
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..functions.ids import canonical_id_column, fast_id_column
 from ..functions.timeutils import timestamp_from_unix
 from ..model import LoadRequest, ModelError, ObjectMeta, Source, TableDest
 from ..rules.event import EventRuleSet
 from ..rules.schema_rule import SchemaRuleRegistry, validate_output
-from ..schema.strip import strip_struct_column
+from ..schema.strip import profile_struct_column, strip_struct
+# strip_struct_column is no longer called here: one grouped profile
+# replaces it. It stays importable from this module because
+# perfbench/spans.py wraps it by this name (schema.strip_s, now 0).
+from ..schema.strip import strip_struct_column  # noqa: F401
 from ..sinks.base import Sink
 from ..sources.jsonsrc import read_objects
 
 META_DEST = TableDest("swarm", "load_log")
+ROUTE_COLS = ("dataset", "table", "partition")
+
+
+def _dest_key(dest: TableDest) -> tuple:
+    return (dest.dataset, dest.table, dest.partition)
 
 
 class IngestPartialFailure(RuntimeError):
@@ -230,23 +251,36 @@ class IngestPipeline:
     def _write_routed(
         self, enveloped: DataFrame, stats: IngestStats, txn=None
     ) -> dict[tuple, int]:
-        """Per-destination evolve+append.
+        """Per-destination evolve+append, destinations written concurrently.
+
+        One grouped aggregation over the persisted frame profiles every
+        destination at once (row count + T1 keep-set of ``data``); each
+        stripped ``data`` type is derived from its keep-set in Python.
+        ``ensure_table`` then runs serially on this thread in sorted
+        destination order, and the slices are appended from a Python
+        thread pool bounded by min(distinct tables, defaultParallelism)
+        — the reference's one goroutine per table (load.go:100-130).
+        Each task inherits this thread's Spark local properties, so its
+        jobs stay in the caller's job group. Per batch that is one
+        profile aggregation plus one write job per destination, which
+        also returns its row count.
 
         Default mode: PARTIAL-failure tolerance — one bad destination
         (schema conflict, sink failure) never blocks the others; its
         error is recorded per-ingest and surfaced after every
-        destination has been attempted (reference semantics,
-        load.go:100-130: per-table goroutines report errors
+        destination has been attempted, errors in sorted destination
+        order (reference semantics: per-table goroutines report errors
         independently).
 
         ``atomic=True``: all destination slices stage in a sink
-        transaction; any failure aborts it and no rows become visible
-        (see TableTransaction — schema evolution is still applied
-        eagerly, which is harmless because the merge is monotonic/
-        additive). When the caller passes an open ``txn`` (load_objects
-        spans one across all source groups), this call only STAGES into
-        it and the caller commits once; otherwise the transaction is
-        opened and committed here.
+        transaction; any failure aborts it — once every staging task has
+        returned — and no rows become visible (see TableTransaction —
+        schema evolution is still applied eagerly, which is harmless
+        because the merge is monotonic/additive; an ensure failure stops
+        the batch before any slice stages). When the caller passes an
+        open ``txn`` (load_objects spans one across all source groups),
+        this call only STAGES into it and the caller commits once;
+        otherwise the transaction is opened and committed here.
 
         Returns the per-destination staged row counts. They are merged
         into ``stats.rows_by_dest`` here ONLY when this call made the
@@ -255,46 +289,45 @@ class IngestPipeline:
         un-merged and the caller folds them in after ITS commit, so an
         aborted batch never reports rows for invisible destinations."""
         enveloped = enveloped.persist()
-        errors: list[tuple[TableDest, Exception]] = []
+        errors: dict[TableDest, Exception] = {}
         own_txn = txn is None and self.atomic
         if own_txn:
             txn = self.sink.transaction()
         staged: dict[tuple, int] = {}
         try:
-            dests = [
-                TableDest(r["dataset"], r["table"], r["partition"])
-                for r in enveloped.select("dataset", "table", "partition")
-                .distinct()
-                .collect()
-            ]
-            for dest in sorted(dests, key=lambda d: (d.dataset, d.table, d.partition)):
-                batch = enveloped.where(
-                    (F.col("dataset") == dest.dataset)
-                    & (F.col("table") == dest.table)
-                    & (F.col("partition") == dest.partition)
-                ).select("id", "ingest_id", "timestamp", "ingested_at", "data")
+            data = enveloped.schema["data"]
+            profiles = sorted(
+                profile_struct_column(enveloped, "data", by=ROUTE_COLS),
+                key=lambda p: p.key,
+            )
+            # Q1/Q2/Q4 serially, in sorted order: schema files are
+            # small local file writes, and a stable order keeps
+            # evolution and error reporting deterministic
+            ready = []
+            for p in profiles:
+                dest = TableDest(*p.key)
                 try:
-                    # T1: per-destination-batch void pruning before inference
-                    batch = strip_struct_column(batch, "data")
-                    merged = self.sink.ensure_table(dest, batch.schema["data"].dataType)
-                    aligned = self._align_data(batch, merged)
-                    if txn is not None:
-                        n = txn.stage(dest, aligned)
-                    elif self.merge:
-                        # id-upsert re-ingest: corrected objects replace
-                        # their previous rows (partition-scoped rewrite)
-                        n = self.sink.merge_by_id(dest, aligned)["rows_in"]
-                    else:
-                        n = self.sink.append(dest, aligned)
+                    # T1: per-destination void pruning before inference
+                    projected, data_type = strip_struct("data", data, p.keep)
+                    merged = self.sink.ensure_table(dest, data_type)
                 except Exception as e:  # noqa: BLE001 — recorded, surfaced below
-                    errors.append((dest, e))
-                    stats.errors.append(f"{dest.dataset}.{dest.table}: {e}")
-                    if txn is not None:  # all-or-nothing: first error aborts
-                        txn.abort()
-                        raise IngestPartialFailure(stats, errors) from e
+                    errors[dest] = e
+                    if txn is not None:  # all-or-nothing: stage nothing
+                        break
                     continue
-                key = (dest.dataset, dest.table, dest.partition)
-                staged[key] = staged.get(key, 0) + n
+                ready.append((p.rows, dest, projected, data_type, merged))
+            if ready and not (errors and txn is not None):
+                for dest, fut in self._fan_out(enveloped, ready, txn).items():
+                    try:
+                        staged[_dest_key(dest)] = fut.result()
+                    except Exception as e:  # noqa: BLE001 — recorded, surfaced below
+                        errors[dest] = e
+            failed = sorted(errors.items(), key=lambda de: _dest_key(de[0]))
+            for dest, e in failed:
+                stats.errors.append(f"{dest.dataset}.{dest.table}: {e}")
+            if failed and txn is not None:  # all-or-nothing: any error aborts
+                txn.abort()
+                raise IngestPartialFailure(stats, failed) from failed[0][1]
             if own_txn:
                 txn.commit()
             if txn is None or own_txn:  # rows are visible: report them
@@ -302,15 +335,49 @@ class IngestPipeline:
                     stats.rows_by_dest[key] = stats.rows_by_dest.get(key, 0) + n
         finally:
             enveloped.unpersist()
-        if errors and self.strict and txn is None:
-            dest, first = errors[0]
-            raise IngestPartialFailure(stats, errors) from first
+        if failed and self.strict:
+            raise IngestPartialFailure(stats, failed) from failed[0][1]
         return staged
 
-    def _align_data(self, batch: DataFrame, merged_data: T.StructType) -> DataFrame:
+    def _fan_out(self, enveloped: DataFrame, ready: list, txn) -> dict:
+        """W1 for every ensured destination from a thread pool.
+        Returns each destination's future once every task has returned.
+        Tasks are submitted largest slice first, so the longest writes
+        start earliest."""
+
+        def write(dest, projected, data_type, merged):
+            batch = enveloped.where(
+                (F.col("dataset") == dest.dataset)
+                & (F.col("table") == dest.table)
+                & (F.col("partition") == dest.partition)
+            ).select("id", "ingest_id", "timestamp", "ingested_at", projected.alias("data"))
+            aligned = self._align_data(batch, merged, data_type)
+            if txn is not None:
+                return txn.stage(dest, aligned)
+            if self.merge:
+                # id-upsert re-ingest: corrected objects replace
+                # their previous rows (partition-scoped rewrite)
+                return self.sink.merge_by_id(dest, aligned)["rows_in"]
+            return self.sink.append(dest, aligned)
+
+        tables = {(dest.dataset, dest.table) for _, dest, *_ in ready}
+        workers = min(len(tables), self.spark.sparkContext.defaultParallelism)
+        futures = {}
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            for _, dest, *args in sorted(ready, key=lambda r: (-r[0], _dest_key(r[1]))):
+                # wrapped per task: each gets its own copy of this
+                # thread's local properties (job group included)
+                task = inheritable_thread_target(self.spark)(write)
+                futures[dest] = pool.submit(task, dest, *args)
+        return futures
+
+    def _align_data(
+        self, batch: DataFrame, merged_data: T.StructType, src_type: T.DataType | None = None
+    ) -> DataFrame:
         from ..schema.infer import _align_expr  # aligned struct projection
 
-        src_type = batch.schema["data"].dataType
+        if src_type is None:
+            src_type = batch.schema["data"].dataType
         return batch.select(
             "id",
             "ingest_id",

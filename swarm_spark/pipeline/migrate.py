@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..model import ModelError, ObjectMeta, TableDest
-from ..pipeline.ingest import IngestPipeline
-from ..schema.strip import strip_struct_column
+from ..pipeline.ingest import ROUTE_COLS, IngestPipeline
+from ..schema.strip import profile_struct_column, strip_struct
 from ..sinks.table import TableSink
 
 
@@ -62,20 +62,12 @@ def apply_schema(pipeline: IngestPipeline, objs: list[ObjectMeta]) -> list[Table
     enveloped = pipeline.transform_objects(objs)
     if enveloped is None:
         return []
-    from pyspark.sql import functions as F
-
+    data = enveloped.schema["data"]
     touched = []
-    dests = [
-        TableDest(r["dataset"], r["table"], r["partition"])
-        for r in enveloped.select("dataset", "table", "partition").distinct().collect()
-    ]
-    for dest in sorted(dests, key=lambda d: (d.dataset, d.table, d.partition)):
-        batch = enveloped.where(
-            (F.col("dataset") == dest.dataset)
-            & (F.col("table") == dest.table)
-            & (F.col("partition") == dest.partition)
-        ).select("data")
-        batch = strip_struct_column(batch, "data")
-        pipeline.sink.ensure_table(dest, batch.schema["data"].dataType)
+    # one grouped profile for every destination, as in the ingest path
+    for p in sorted(profile_struct_column(enveloped, "data", by=ROUTE_COLS), key=lambda p: p.key):
+        dest = TableDest(*p.key)
+        _, data_type = strip_struct("data", data, p.keep)
+        pipeline.sink.ensure_table(dest, data_type)
         touched.append(dest)
     return touched

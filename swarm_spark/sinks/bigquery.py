@@ -223,6 +223,8 @@ class BigQuerySink(Sink):
     # --------------------------------------------------------- W1/W2
     def append(self, dest: TableDest, df: DataFrame) -> int:
         self._probe_connector()
+        # a separate count, not an observed write (table.counted_write):
+        # with_backoff may run the write more than once
         n = df.count()
 
         def write():

@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from ..model import TableDest
 from ..schema.merge import merge_schemas
 from .base import Sink
-from .table import envelope_schema
+from .table import counted_write, envelope_schema
 
 
 class DumpSink(Sink):
@@ -43,9 +43,7 @@ class DumpSink(Sink):
         return data_schema
 
     def append(self, dest: TableDest, df: DataFrame) -> int:
-        n = df.count()
-        df.write.mode("append").json(self._base(dest) + ".log")
-        return n
+        return counted_write(df, self._base(dest) + ".log", fmt="json")
 
     def read_table(self, dest: TableDest) -> DataFrame:
         with open(self._base(dest) + ".schema.json", encoding="utf-8") as f:

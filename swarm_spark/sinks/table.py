@@ -7,6 +7,12 @@ Physical layout per destination::
         part-*.parquet          # appended batches (partitioned subdirs
                                 #   __swarm_part=... when unit != "")
 
+Every append writes into a hidden ``_staged-<uuid>`` dir of its own and
+then moves its files into place, so concurrent appends to one table (the
+ingest fan-out, in-flight serve pushes) never share a Hadoop
+``_temporary`` dir; the write job also returns its row count
+(:func:`counted_write`).
+
 Schema evolution = strict merge of the stored ``data`` struct with the
 incoming batch's struct (union, stable order, error on conflict —
 reference pkg/usecase/bigquery.go:15-45), then an atomic schema-file
@@ -38,7 +44,7 @@ import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -736,17 +742,40 @@ def _write_slice(d: str, dest: TableDest, df: DataFrame) -> int:
     """Append one destination slice under ``d`` (direct table dir or a
     transaction's staged dir), honoring the time-unit partitioning —
     the single write path shared by append() and TableTransaction."""
-    n = df.count()
-    if n == 0:
-        return 0
-    writer = df
-    if dest.partition != TimeUnit.NONE.value:
-        writer = df.withColumn(
-            PARTITION_COL, partition_value(F.col("timestamp"), dest.partition)
-        )
-        writer.write.mode("append").partitionBy(PARTITION_COL).parquet(d)
-    else:
-        writer.write.mode("append").parquet(d)
+    if dest.partition == TimeUnit.NONE.value:
+        return counted_write(df, d)
+    df = df.withColumn(PARTITION_COL, partition_value(F.col("timestamp"), dest.partition))
+    return counted_write(df, d, partition_by=PARTITION_COL)
+
+
+def counted_write(
+    df: DataFrame, d: str, fmt: str = "parquet", partition_by: str | None = None
+) -> int:
+    """Append ``df`` under ``d`` and return its row count, in ONE job.
+
+    The count comes from the write itself (``DataFrame.observe``), not
+    from a separate ``count()`` pass. The write lands in a hidden
+    ``_staged-<uuid>`` dir of its own and is then promoted into ``d``
+    (:func:`_promote`): concurrent appends to one dir never share a
+    Hadoop ``_temporary`` dir, where the first job commit would delete
+    the other's attempt files. An empty frame leaves no data file:
+    Spark writes a schema-only part file for an empty unpartitioned
+    write, so the staged dir is dropped unpromoted, as is a failed
+    write's."""
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    write_id = uuid.uuid4().hex
+    staged = os.path.join(d, f"{STAGED_PREFIX}{write_id}")
+    writer = observed.write.mode("overwrite").format(fmt)
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    try:
+        writer.save(staged)
+        n = int(obs.get["rows"])
+        if n:
+            _promote(d, write_id)
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)  # empty or failed write
     return n
 
 
@@ -839,6 +868,11 @@ class TableTransaction:
         n = _write_slice(self._staged_dir(dest), dest, df)
         if n:
             self._staged.append(dest)
+        else:
+            try:  # the empty write made this dir; keep none behind
+                os.rmdir(self._staged_dir(dest))
+            except OSError:  # a slice of another stage() call is in it
+                pass
         return n
 
     def commit(self) -> None:

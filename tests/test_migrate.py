@@ -60,6 +60,21 @@ class TestMigrate:
         )
         assert n == 5
 
+    def test_query_selecting_nothing_writes_nothing(self, spark, tmp_path):
+        """migrate hands the sink whatever its query returns; an empty
+        result counts 0 and leaves no data file in the destination."""
+        pipe, sink = _pipe(spark, tmp_path)
+        p = tmp_path / "a.ndjson"
+        p.write_text(json.dumps({"kind": "a", "v": 1, "ts": 1700000000}))
+        pipe.load_objects([ObjectMeta(bucket="b", name="a.ndjson", path=str(p))])
+        dst = TableDest("ds", "t_none")
+        n = migrate(
+            spark, sink, TableDest("ds", "t_a"), dst, query="SELECT * FROM src WHERE false"
+        )
+        assert n == 0
+        assert sink._data_files(dst) == []
+        assert sink.read_table(dst).count() == 0
+
     def test_wrong_shape_rejected(self, spark, tmp_path):
         pipe, sink = _pipe(spark, tmp_path)
         p = tmp_path / "a.ndjson"

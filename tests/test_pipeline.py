@@ -360,3 +360,61 @@ class TestDumpSink:
             "data",
         ]
         assert sink.read_table(TableDest("my_dataset", "cloudtrail")).count() == 4
+
+
+class TestJobBudget:
+    """Spark jobs of one ``load_objects`` batch, counted from
+    ``statusTracker`` under the caller's job group. The fixed part:
+    1 JSON inference scan, 2 for the R3 validation probe (limit + count),
+    and 3 for the one grouped profile (cache fill, shuffle map, result).
+    Each destination adds exactly its write job, which also counts its
+    rows; a per-destination strip aggregation or ``count()`` would add
+    one more job per destination and break the budget."""
+
+    FIXED_JOBS = 6
+
+    def test_jobs_per_batch_stay_in_the_callers_group(self, spark, tmp_path):
+        import uuid
+
+        sink = TableSink(spark, str(tmp_path / "wh"))
+        rules = SchemaRuleRegistry()
+
+        @rules.rule("bykind")
+        def bykind(df):
+            return rule_output(
+                df,
+                dataset="logs",
+                table=F.concat(F.lit("t_"), F.col("kind")),
+                partition="day",
+                timestamp=F.col("ts").cast("double"),
+                data=F.struct("kind", "v", "extra"),
+            )
+
+        events = EventRuleSet([EventRule("all", name_suffix(".ndjson"), (Source(schema="bykind"),))])
+        pipe = IngestPipeline(spark, events, rules, sink)
+        p = tmp_path / "mix.ndjson"
+        p.write_text(
+            "\n".join(
+                json.dumps(
+                    {"kind": "abc"[i % 3], "v": i, "extra": [i] if i % 2 else None, "ts": 1700000000 + 3600 * i}
+                )
+                for i in range(30)
+            )
+        )
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = f"budget-{uuid.uuid4().hex}"
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, "job budget")
+        try:
+            stats = pipe.load_objects([ObjectMeta(bucket="b", name="mix.ndjson", path=str(p))])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert stats.rows_by_dest == {("logs", f"t_{k}", "day"): 10 for k in "abc"}
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) <= self.FIXED_JOBS + len(stats.rows_by_dest), sorted(jobs)
+        # the concurrent appends ran on pool threads, yet no job left
+        # the caller's group
+        assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

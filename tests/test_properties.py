@@ -1,15 +1,23 @@
 """Property-based tests (hypothesis) for the parity-critical primitives:
-canonical JSON, float formatting, stripping, and strict merge."""
+canonical JSON, float formatting, stripping (record and DataFrame
+side), and strict merge."""
 
 from __future__ import annotations
 
 import json
 
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from swarm_spark.functions.ids import canonical_json, go_format_float, log_id
-from swarm_spark.schema.strip import strip_record
+from swarm_spark.schema.strip import (
+    profile_struct_column,
+    strip_record,
+    strip_struct,
+    strip_struct_column,
+)
 
 json_scalars = st.one_of(
     st.none(),
@@ -122,6 +130,100 @@ class TestStripProperties:
                     check(val)
 
         check(out)
+
+
+# nested ``data`` structs: long, string and array leaves, nested and
+# empty structs (F7: ``{"nested": {}}`` infers ``struct<>``)
+leaf_types = st.sampled_from(
+    [T.LongType(), T.StringType(), T.ArrayType(T.LongType()), T.StructType([])]
+)
+
+
+def _struct_of(children):
+    return st.lists(st.tuples(children, st.booleans()), min_size=1, max_size=3).map(
+        lambda fs: T.StructType(
+            [T.StructField(f"f{i}", t, nullable) for i, (t, nullable) in enumerate(fs)]
+        )
+    )
+
+
+data_types = _struct_of(st.recursive(leaf_types, _struct_of, max_leaves=5))
+
+
+def _values(dt, nullable=True):
+    """A value of ``dt``: null wherever the schema allows it (F7 null),
+    empty arrays and arrays holding nulls."""
+    if isinstance(dt, T.StructType):
+        value = st.tuples(*[_values(f.dataType, f.nullable) for f in dt.fields])
+    elif isinstance(dt, T.ArrayType):
+        value = st.one_of(
+            st.just([]),
+            st.lists(st.one_of(st.none(), st.integers(-3, 3)), min_size=1, max_size=2),
+        )
+    elif isinstance(dt, T.LongType):
+        value = st.integers(-3, 3)
+    else:
+        value = st.text(alphabet="xy", max_size=2)
+    return st.one_of(st.none(), value) if nullable else value
+
+
+def _typed_leaves(dt, value, prefix=""):
+    """Oracle: the leaf paths under ``dt`` that carry typed information
+    in ``value`` (a non-null scalar or a non-empty array)."""
+    out = set()
+    for f, v in zip(dt.fields, value if value is not None else [None] * len(dt.fields)):
+        path = f"{prefix}{f.name}"
+        if isinstance(f.dataType, T.StructType):
+            out |= _typed_leaves(f.dataType, v, path + ".")
+        elif v is not None and v != []:
+            out.add(path)
+    return out
+
+
+class TestGroupedStripProfile:
+    """The ingest path strips every destination from ONE grouped
+    profile; each group's keep-set must be exactly what a separate
+    ``strip_struct_column`` over that group's slice keeps, and the type
+    derived from it in Python must be the type Spark gives the
+    stripped column."""
+
+    @given(st.data())
+    @settings(
+        max_examples=20,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+    )
+    def test_grouped_keep_sets_match_per_slice_strip(self, spark, data):
+        dt = data.draw(data_types)
+        nullable = data.draw(st.booleans())
+        rows = data.draw(
+            st.lists(
+                st.tuples(st.sampled_from("abc"), _values(dt, nullable)), min_size=1, max_size=8
+            )
+        )
+        schema = T.StructType(
+            [T.StructField("k", T.StringType(), False), T.StructField("data", dt, nullable)]
+        )
+        df = spark.createDataFrame(rows, schema)
+        field = df.schema["data"]
+        profiles = profile_struct_column(df, "data", by=("k",))
+        assert sorted(p.key[0] for p in profiles) == sorted({k for k, _ in rows})
+        for p in profiles:
+            (k,) = p.key
+            group = [v for kk, v in rows if kk == k]
+            assert p.rows == len(group)
+            want = set().union(*(_typed_leaves(dt, v, "data.") for v in group))
+            assert p.keep == want
+            slice_ = df.where(F.col("k") == k)
+            try:
+                expected = strip_struct_column(slice_, "data").schema["data"].dataType
+            except ValueError:  # entirely void: both paths refuse it
+                try:
+                    strip_struct("data", field, p.keep)
+                except ValueError:
+                    continue
+                raise AssertionError(f"group {k}: grouped keep-set is not void")
+            assert strip_struct("data", field, p.keep)[1] == expected
 
 
 class TestShuffleRangeFold:
